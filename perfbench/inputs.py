@@ -17,14 +17,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 
-def convs_for_rows(seed: int, target_rows: int) -> tuple[int, int]:
-    """Fewest conversations whose generated turns reach ``target_rows``,
-    and how many turns of the last one to keep so the total is exact."""
+def convs_for_rows(seed: int, target_rows: int, max_turns: int) -> tuple[int, int]:
+    """Fewest conversations whose generated turns (each cut to at most
+    ``max_turns``) reach ``target_rows``, and how many turns of the last
+    one to keep so the total is exact."""
     from associationabacminer_spark.sources.transcripts import turns_per_conv
 
     n = max(1024, target_rows // 4)
     while True:
-        cum = np.cumsum(turns_per_conv(np.arange(n), seed))
+        cum = np.cumsum(np.minimum(turns_per_conv(np.arange(n), seed), max_turns))
         if cum[-1] >= target_rows:
             last = int(np.searchsorted(cum, target_rows))
             before = int(cum[last - 1]) if last else 0
@@ -32,11 +33,13 @@ def convs_for_rows(seed: int, target_rows: int) -> tuple[int, int]:
         n *= 2
 
 
-def write_transcripts(spark, path: str, seed: int, target_rows: int) -> None:
+def write_transcripts(spark, path: str, seed: int, target_rows: int, max_turns: int) -> None:
     """Exactly ``target_rows`` turns: the last conversation is cut to a
     prefix of its turns.  Turn counts are Pareto-distributed (up to 20000
     per conversation), so without the cut one seed's table could be half
-    again as large as another's."""
+    again as large as another's.  ``max_turns`` cuts every conversation
+    to a prefix of at most that many turns, so that no seed's table is
+    dominated by a single conversation."""
     from pyspark.sql import functions as F
 
     from associationabacminer_spark.sources.transcripts import (
@@ -44,10 +47,11 @@ def write_transcripts(spark, path: str, seed: int, target_rows: int) -> None:
         transcripts_pdf,
     )
 
-    n_convs, keep = convs_for_rows(seed, target_rows)
+    n_convs, keep = convs_for_rows(seed, target_rows, max_turns)
     last_id = transcripts_pdf(np.array([n_convs - 1]), seed=seed)["conv_id"].iloc[0]
     generate_transcripts(spark, n_convs=n_convs, seed=seed).filter(
-        (F.col("conv_id") != last_id) | (F.col("turn_idx") < keep)
+        (F.col("turn_idx") < max_turns)
+        & ((F.col("conv_id") != last_id) | (F.col("turn_idx") < keep))
     ).write.mode("overwrite").parquet(path)
 
 

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload sketch_build --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload sketch_build --seed 1 --seconds 10 --trace 0
 
 Runs one workload in one process against Spark at local[2] and prints,
 as its last stdout line, one JSON object with ``correct``, ``attempted``,
@@ -23,7 +23,7 @@ from statistics import median
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the first set-up in a fresh JVM also pays for the first Spark job and
 # the Python workers' start; setup_s is the median of the ones after it
-SETUP_REPEATS = 4
+SETUP_REPEATS = 3
 # the median of one pass is one pass's noise; the loop runs past
 # --seconds when a pass is that long
 MIN_PASSES = 2

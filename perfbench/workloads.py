@@ -91,10 +91,15 @@ class Workload:
 class TranscriptWorkload(Workload):
     """Shared set-up: a generated transcript table and its exact answers."""
 
+    # turns kept per generated conversation: uncut, one conversation held
+    # a fifth to two fifths of the table on some seeds, and set-up and pass
+    # times followed the seed
+    max_turns = 1000
+
     def setup(self) -> dict[str, float]:
         table = self.path("transcripts")
         t0 = now()
-        write_transcripts(self.spark, table, self.seed, self.rows)
+        write_transcripts(self.spark, table, self.seed, self.rows, self.max_turns)
         t1 = now()
         self.exact = transcript_exact(self.spark, table, self.seed)
         return {"generate_s": t1 - t0, "exact_s": now() - t1}
@@ -115,9 +120,9 @@ class SketchBuild(TranscriptWorkload):
     SQL-reduction bound, few large jobs."""
 
     name = "sketch_build"
-    base_rows = 80_000
-    # pass times fall for the first three passes of a fresh JVM
-    warm_passes = 3
+    base_rows = 120_000
+    # pass times fall for the first five passes of a fresh JVM
+    warm_passes = 5
 
     def load(self) -> None:
         super().load()
@@ -200,8 +205,10 @@ class WindowResume(TranscriptWorkload):
 
     name = "window_resume"
     base_rows = 40_000
-    # the reference builds below warm the same code; a warm-up pass on top
-    # cut the first timed pass's excess from ~12% to ~3% for ~10 s a run
+    # the reference builds below warm most of the same code.  A warm-up
+    # pass on top steadied the first timed pass, but cost 7-14 s a run,
+    # which brought the runs to the edge of their time budget while the
+    # host was slow, and it did not narrow the spread between runs
     warm_passes = 0
     groups = 8
     # one partial per core per window at local[2]; the default (8) spends

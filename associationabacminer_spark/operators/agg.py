@@ -1,5 +1,5 @@
 """The two-stage sketch aggregation harness: per-partition build ->
-tree merge, with salted repartitioning and a lineage ledger.
+tree merge, with content-hash grouping and a lineage ledger.
 
 This formalizes the reference's hand-rolled partial-aggregation shape —
 ``Pool.starmap_async(calc_hashes, chunks, callback=merge_into_set)``
@@ -8,7 +8,7 @@ This formalizes the reference's hand-rolled partial-aggregation shape —
 largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-135)
 — as an idiomatic Spark pipeline:
 
-    stage 1 (build):  df.withColumn(group_id, salted hash)
+    stage 1 (build):  df.withColumn(group_id, content hash)
                         .groupBy(group_id).applyInPandas(build)
                       -> lineage rows (group_id, sketch_name, row_count,
                          sketch binary, wall_time_s)
@@ -17,7 +17,7 @@ largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-
 
 Scale notes (100 TB / 1000 executors):
 - The only wide exchange is the stage-1 groupBy on ``group_id`` — a
-  *uniform* integer key (salted row hash), so no skew regardless of how
+  *uniform* integer key (content hash), so no skew regardless of how
   hot a conversation is; sketches are order-insensitive so splitting a
   conversation across groups is safe (SURVEY.md §7.4 hard part 4).
 - Shuffle payload after stage 1 is G x (few KiB..16 KiB) binary states,
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import reduce
+from itertools import groupby
 from typing import Callable
 
 import pandas as pd
@@ -39,8 +39,14 @@ from pyspark.sql import functions as F
 LINEAGE_SCHEMA = (
     "group_id int, sketch_name string, row_count long, sketch binary, wall_time_s double"
 )
+_LINEAGE_COLS = ["group_id", "sketch_name", "row_count", "sketch", "wall_time_s"]
 
 _GROUP_COL = "__sketch_group__"
+
+# tree_merge: partial states merged per level, and the state count per
+# sketch at or under which the driver folds the rest
+FANOUT = 16
+DRIVER_THRESHOLD = 64
 
 # Sentinel standing in for NULL in int64 key columns: a nullable int64
 # column crosses Arrow->pandas as float64, destroying the low bits of
@@ -79,48 +85,31 @@ class SketchSpec:
         return self.factory(**self.params) if self.params else self.factory()
 
 
-def salted_group_id(
-    num_groups: int,
-    group_col: str = "conv_id",
-    salt_col: str = "turn_idx",
-    salts: int = 8,
-):
-    """Deterministic salted grouping expression.
-
-    Base group = hash(conv_id) spread over num_groups//salts buckets;
-    salt = hash(turn_idx-within-key) over ``salts`` sub-buckets — a hot
-    conversation is split across ``salts`` groups instead of melting one
-    task (the reference's analog pain: 10x10 hand-chunking at
-    /root/reference/src/eval/EnvPolicyEvaluator.py:109-121).
-    Deterministic (no rand()) so a resumed run regroups identically.
-    """
-    base_groups = max(1, num_groups // salts)
-    base = F.pmod(F.xxhash64(F.col(group_col)), F.lit(base_groups))
-    salt = F.pmod(F.xxhash64(F.col(group_col), F.col(salt_col)), F.lit(salts))
-    return (base * salts + salt).cast("int")
-
-
-def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
-    """Project exactly the columns the build needs, pre-hashing key
-    columns JVM-side for ``prehash`` specs (null keys stay null so
-    ``dropna`` still works).  Returns (projected_df, per-spec input
-    column names)."""
-    cols: dict[str, object] = {c: F.col(c) for c in extra}
-    spec_cols: list[str] = []
+def _projected(df: DataFrame, specs: list[SketchSpec], *lead):
+    """Project the ``lead`` columns and exactly the input columns the
+    specs consume, pre-hashing key columns JVM-side for ``prehash``
+    specs.  Returns (projected_df, spec_list), one spec_list entry per
+    spec: (name, make, input column, dropna, NULL sentinel, update_batch
+    keyword arguments)."""
+    cols: dict[str, object] = {}
+    spec_list = []
     for s in specs:
         if s.prehash:
             name = f"__xxh_{s.column}__"
-            if name not in cols:
-                # NULL -> sentinel keeps the column int64 across Arrow
-                cols[name] = F.when(
-                    F.col(s.column).isNotNull(), F.xxhash64(s.column)
-                ).otherwise(F.lit(NULL_SENTINEL))
-            spec_cols.append(name)
+            # NULL -> sentinel keeps the column int64 across Arrow
+            cols.setdefault(
+                name,
+                F.when(F.col(s.column).isNotNull(), F.xxhash64(s.column)).otherwise(
+                    F.lit(NULL_SENTINEL)
+                ),
+            )
+            sentinel, kw = NULL_SENTINEL, {"prehashed": True}
         else:
-            cols[s.column] = F.col(s.column)
-            spec_cols.append(s.column)
-    proj = df.select(*[v.alias(k) for k, v in cols.items()])
-    return proj, spec_cols
+            name = s.column
+            cols.setdefault(name, F.col(name))
+            sentinel, kw = s.null_value, {}
+        spec_list.append((s.name, s.make, name, s.dropna, sentinel, kw))
+    return df.select(*lead, *[v.alias(k) for k, v in cols.items()]), spec_list
 
 
 def _clean(col, dropna: bool, sentinel):
@@ -134,13 +123,61 @@ def _clean(col, dropna: bool, sentinel):
     return col.to_numpy()
 
 
+def _fold(acc: dict, pdf: pd.DataFrame, spec_list) -> dict:
+    """Fold one pandas batch into ``acc`` ({name: (kernel, rows, secs)}),
+    making each spec's kernel on first use: one ``update_batch`` per
+    spec per batch."""
+    for name, make, column, dropna, sentinel, kw in spec_list:
+        t0 = time.perf_counter()
+        kernel, rows, secs = acc[name] if name in acc else (make(), 0, 0.0)
+        arr = _clean(pdf[column], dropna, sentinel)
+        if len(arr):
+            kernel.update_batch(arr, **kw)
+        acc[name] = (kernel, rows + len(arr), secs + time.perf_counter() - t0)
+    return acc
+
+
+def _states(acc: dict) -> list[tuple]:
+    """(sketch_name, row_count, serialized sketch, wall_time_s) per spec."""
+    return [(n, rows, k.serialize(), secs) for n, (k, rows, secs) in acc.items()]
+
+
+def _deserializers(specs) -> dict:
+    """{sketch_name: deserialize} for every spec."""
+    return {s.name: (s.kernel_cls or type(s.make())).deserialize for s in specs}
+
+
+def _merged(blobs, deserialize):
+    """Fold a pre-sorted sequence of serialized states left to right with
+    the kernel's merge, deserializing each state once."""
+    acc = None
+    for blob in blobs:
+        k = deserialize(bytes(blob))
+        acc = k if acc is None else type(k).merge(acc, k)
+    return acc
+
+
+def _merge_states(pdf: pd.DataFrame, order: str, deser: dict, keep=()) -> pd.DataFrame:
+    """One applyInPandas group of one sketch's serialized states -> one
+    row: the ``keep`` columns of the first row in ``order`` (a fixed
+    merge order keeps merged states byte-reproducible), the summed
+    row_count (and wall_time_s, when present) and the merged state."""
+    pdf = pdf.sort_values(order, kind="stable")
+    name = pdf["sketch_name"].iloc[0]
+    out = {c: [pdf[c].iloc[0]] for c in keep}
+    out["sketch_name"] = [name]
+    out["row_count"] = [int(pdf["row_count"].sum())]
+    out["sketch"] = [_merged(pdf["sketch"], deser[name]).serialize()]
+    if "wall_time_s" in pdf:
+        out["wall_time_s"] = [float(pdf["wall_time_s"].sum())]
+    return pd.DataFrame(out)
+
+
 def build_sketches(
     df: DataFrame,
     specs: list[SketchSpec],
     num_groups: int | None = None,
-    group_expr=None,
     only_groups: list[int] | None = None,
-    order_by: list[str] | None = None,
     method: str = "map",
 ) -> DataFrame:
     """Stage 1: one pass over the data builds every spec's sketch per
@@ -150,129 +187,57 @@ def build_sketches(
     — ZERO extra shuffle; group id = spark_partition_id, streaming over
     Arrow batches (never materializes a whole group in memory).  This is
     the treeAggregate shape and the 100 TB default.  Deterministic for a
-    fixed input + partitioning (resume contract).
+    fixed input + partitioning (resume contract).  The group count is
+    the input partition count, so ``num_groups`` is refused here.
 
-    ``method='group'``: explicit ``groupBy(group_expr).applyInPandas``
-    with a deterministic content-hash (or ``salted_group_id``) key —
-    use when the build must follow a specific grouping (e.g. to reuse a
-    prior shuffle, or a fixed group count for a ledger).
+    ``method='group'``: explicit ``groupBy(group id).applyInPandas`` into
+    ``num_groups`` groups (default twice the default parallelism) keyed
+    by a deterministic content hash of the spec columns — use when the
+    build needs a fixed group count, e.g. for a ledger.
 
     ``only_groups`` restricts the build to the listed group ids (the
     resume path: rebuild only partitions missing from the ledger).
-    ``order_by`` sorts rows inside each group before the kernel update —
-    needed only for byte-identical reproducibility of the order-sensitive
-    kernels (KLL/t-digest); HLL/CMS/Bloom commute elementwise.
     """
-    order_by = order_by or []
-    proj, spec_cols = _projected(df, specs, extra=order_by)
-    spec_list = [
-        (
-            s.name,
-            s.make,
-            c,
-            s.dropna,
-            s.prehash,
-            NULL_SENTINEL if s.prehash else s.null_value,
+    if method == "map" and num_groups is not None:
+        raise ValueError(
+            "num_groups sets the group count of method='group'; the map "
+            "build has one group per input partition"
         )
-        for s, c in zip(specs, spec_cols)
-    ]
-
+    proj, spec_list = _projected(df, specs)
     if method == "map":
         tagged = proj.withColumn(_GROUP_COL, F.spark_partition_id())
-        if only_groups is not None:
-            tagged = tagged.filter(
-                F.col(_GROUP_COL).isin([int(g) for g in only_groups])
-            )
-
-        def build_stream(batches):
-            state: dict = {}
-            rows: dict = {}
-            times: dict = {}
-            gid = -1
-            buffered: list[pd.DataFrame] | None = [] if order_by else None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                gid = int(pdf[_GROUP_COL].iloc[0])
-                if buffered is not None:
-                    buffered.append(pdf)
-                    continue
-                for name, make, column, dropna, prehash, sentinel in spec_list:
-                    t0 = time.perf_counter()
-                    if name not in state:
-                        state[name] = make()
-                        rows[name] = 0
-                        times[name] = 0.0
-                    arr = _clean(pdf[column], dropna, sentinel)
-                    if len(arr):
-                        if prehash:
-                            state[name].update_batch(arr, prehashed=True)
-                        else:
-                            state[name].update_batch(arr)
-                        rows[name] += len(arr)
-                    times[name] += time.perf_counter() - t0
-            if buffered:
-                pdf = pd.concat(buffered, ignore_index=True).sort_values(
-                    order_by, kind="stable"
-                )
-                for name, make, column, dropna, prehash, sentinel in spec_list:
-                    t0 = time.perf_counter()
-                    state[name] = make()
-                    arr = _clean(pdf[column], dropna, sentinel)
-                    rows[name] = len(arr)
-                    if len(arr):
-                        if prehash:
-                            state[name].update_batch(arr, prehashed=True)
-                        else:
-                            state[name].update_batch(arr)
-                    times[name] = time.perf_counter() - t0
-            if state:
-                yield pd.DataFrame(
-                    {
-                        "group_id": [gid] * len(state),
-                        "sketch_name": list(state),
-                        "row_count": [rows[n] for n in state],
-                        "sketch": [state[n].serialize() for n in state],
-                        "wall_time_s": [times[n] for n in state],
-                    }
-                )
-
-        return tagged.mapInPandas(build_stream, schema=LINEAGE_SCHEMA)
-
-    # method == "group"
-    if num_groups is None:
-        num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-    if group_expr is None:
+    else:
+        if num_groups is None:
+            num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
         # deterministic uniform content-hash grouping: perfect balance for
-        # order-insensitive sketches, identical across reruns (resume);
-        # salted_group_id is the conv-anchored alternative
-        group_expr = F.pmod(F.xxhash64(*sorted(set(spec_cols) | set(order_by))), F.lit(num_groups)).cast("int")
-    tagged = proj.withColumn(_GROUP_COL, group_expr)
+        # order-insensitive sketches, identical across reruns (resume)
+        tagged = proj.withColumn(
+            _GROUP_COL,
+            F.pmod(F.xxhash64(*sorted(proj.columns)), F.lit(num_groups)).cast("int"),
+        )
     if only_groups is not None:
         tagged = tagged.filter(F.col(_GROUP_COL).isin([int(g) for g in only_groups]))
 
+    def frame(gid: int, acc: dict) -> pd.DataFrame:
+        return pd.DataFrame([(gid, *st) for st in _states(acc)], columns=_LINEAGE_COLS)
+
+    if method == "map":
+
+        def build_stream(batches):
+            acc: dict = {}
+            gid = -1
+            for pdf in batches:
+                if len(pdf):
+                    gid = int(pdf[_GROUP_COL].iloc[0])
+                    _fold(acc, pdf, spec_list)
+            if acc:
+                yield frame(gid, acc)
+
+        return tagged.mapInPandas(build_stream, schema=LINEAGE_SCHEMA)
+
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         gid = int(pdf[_GROUP_COL].iloc[0]) if len(pdf) else -1
-        if order_by:
-            pdf = pdf.sort_values(order_by, kind="stable")
-        out = []
-        for name, make, column, dropna, prehash, sentinel in spec_list:
-            t0 = time.perf_counter()
-            kernel = make()
-            arr = _clean(pdf[column], dropna, sentinel)
-            n = len(arr)
-            if n:
-                if prehash:
-                    kernel.update_batch(arr, prehashed=True)
-                else:
-                    kernel.update_batch(arr)
-            out.append(
-                (gid, name, n, kernel.serialize(), time.perf_counter() - t0)
-            )
-        return pd.DataFrame(
-            out,
-            columns=["group_id", "sketch_name", "row_count", "sketch", "wall_time_s"],
-        )
+        return frame(gid, _fold({}, pdf, spec_list))
 
     return tagged.groupBy(_GROUP_COL).applyInPandas(build, schema=LINEAGE_SCHEMA)
 
@@ -280,40 +245,25 @@ def build_sketches(
 def tree_merge(
     lineage: DataFrame,
     specs: list[SketchSpec],
-    fanout: int = 16,
-    driver_threshold: int = 64,
     n_states: int | None = None,
 ) -> dict[str, object]:
-    """Stage 2: grouped tree merge with the given fanout until the number
-    of partial states per sketch is <= driver_threshold, then a final
-    driver-side fold.  Returns {sketch_name: kernel}."""
-    deser = {s.name: _deserializer(s) for s in specs}
+    """Stage 2: grouped tree merge, FANOUT states into one, until the
+    number of partial states per sketch is <= DRIVER_THRESHOLD, then a
+    final driver-side fold.  Returns {sketch_name: kernel}."""
+    deser = _deserializers(specs)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sort by source group for a deterministic merge order (resume
+        # sorted by source group for a deterministic merge order (resume
         # byte-identity); merge is associative/commutative so the estimate
         # is invariant either way
-        pdf = pdf.sort_values("group_id", kind="stable")
-        name = pdf["sketch_name"].iloc[0]
-        de = deser[name]
-        kernels = [de(b) for b in pdf["sketch"]]
-        merged = reduce(type(kernels[0]).merge, kernels)
-        return pd.DataFrame(
-            {
-                "group_id": [int(pdf["group_id"].iloc[0])],
-                "sketch_name": [name],
-                "row_count": [int(pdf["row_count"].sum())],
-                "sketch": [merged.serialize()],
-                "wall_time_s": [float(pdf["wall_time_s"].sum())],
-            }
-        )
+        return _merge_states(pdf, "group_id", deser, keep=("group_id",))
 
     persisted = None
     if n_states is None:
         # Upper bound on distinct group ids without running a job: the
         # map build's group id is spark_partition_id, so the lineage has
         # at most one group per input partition.  When that bound already
-        # fits under driver_threshold the tree loop cannot run for ANY
+        # fits under DRIVER_THRESHOLD the tree loop cannot run for ANY
         # actual count <= bound, so the counting job (and the persist
         # that backed it) is pure overhead — the single collect below
         # then consumes the build exactly once, fully pipelined.
@@ -321,7 +271,7 @@ def tree_merge(
             bound = lineage.rdd.getNumPartitions()
         except Exception:
             bound = None
-        if bound is not None and bound <= driver_threshold:
+        if bound is not None and bound <= DRIVER_THRESHOLD:
             n_states = bound
         else:
             # the lineage is tiny (G x n_specs rows); persist so the
@@ -331,8 +281,8 @@ def tree_merge(
                 F.countDistinct("group_id").alias("g")
             ).collect()[0]["g"]
     current = lineage
-    while n_states > driver_threshold:
-        n_next = max(1, (n_states + fanout - 1) // fanout)
+    while n_states > DRIVER_THRESHOLD:
+        n_next = max(1, (n_states + FANOUT - 1) // FANOUT)
         current = (
             current.withColumn(
                 "__bucket__", F.pmod(F.col("group_id"), F.lit(n_next)).cast("int")
@@ -347,36 +297,20 @@ def tree_merge(
     )
     if persisted is not None:
         persisted.unpersist()
-    out: dict[str, object] = {}
-    for row in rows:
-        k = deser[row["sketch_name"]](bytes(row["sketch"]))
-        if row["sketch_name"] in out:
-            out[row["sketch_name"]] = type(k).merge(out[row["sketch_name"]], k)
-        else:
-            out[row["sketch_name"]] = k
-    return out
+    return {
+        name: _merged((r["sketch"] for r in group), deser[name])
+        for name, group in groupby(rows, key=lambda r: r["sketch_name"])
+    }
 
 
 def sketch_aggregate(
     df: DataFrame,
     specs: list[SketchSpec],
     num_groups: int | None = None,
-    group_expr=None,
-    fanout: int = 16,
     method: str = "map",
 ) -> dict[str, object]:
     """build_sketches + tree_merge in one call -> {name: kernel}."""
     if method == "group" and num_groups is None:
         num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-    lineage = build_sketches(
-        df, specs, num_groups=num_groups, group_expr=group_expr, method=method
-    )
-    n_states = num_groups if method == "group" else None
-    return tree_merge(lineage, specs, fanout=fanout, n_states=n_states)
-
-
-def _deserializer(spec: SketchSpec):
-    cls = spec.kernel_cls
-    if cls is None:
-        cls = type(spec.make())
-    return cls.deserialize
+    lineage = build_sketches(df, specs, num_groups=num_groups, method=method)
+    return tree_merge(lineage, specs, n_states=num_groups)

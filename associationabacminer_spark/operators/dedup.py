@@ -79,35 +79,21 @@ def fingerprint_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataF
     )
 
 
-def ngram_jaccard_pairs(
+def _shingle_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_df: int | None = None,
+    n: int,
+    threshold: float,
+    max_shingle_df: int | None,
+    measure: str,
+    denominator,
 ) -> DataFrame:
-    """n-gram Jaccard similar pairs (id_a < id_b, jaccard >= t).
-
-    Candidates come from the shingle equi-join (far below a cross join);
-    the jaccard itself is then computed EXACTLY from the full shingle
-    arrays, so candidate pruning can never corrupt a reported value.
-
-    ``max_shingle_df`` caps candidate generation: shingles appearing in
-    more than that many documents are dropped from the join keys (a
-    stop-shingle shared by 10^6 docs otherwise emits 10^12 candidate
-    pairs — the 100-TB killer).  A pair is missed only if ALL its shared
-    shingles are above the cap; at jaccard >= t a pair shares >=
-    t/(1+t) * max(|A|,|B|) distinct shingles, so a cap above the hot
-    tail leaves real near-dups multiple surviving join keys.  None (the
-    default, for the oracle path) disables the cap.
-
-    Round 6: shingles are xxhash64 longs from the token-hash chain
-    (``word_ngram_hash_arrays``) — no n-gram string is built, the join
-    and the array intersect/union compare 8-byte longs (same counts up
-    to 64-bit collisions, the documented decontaminate/LSH trade), and
-    the exact arrays are rebuilt only for docs that appear in a
-    candidate pair."""
+    """The shared core of the shingle pair operators: hashed shingle
+    arrays, the optional hot-shingle cap, candidate pairs from the
+    shingle equi-join, shingle arrays rebuilt for candidate docs only,
+    then ``measure`` = |A∩B| / ``denominator(A, B)`` computed exactly and
+    kept at >= ``threshold``."""
     sh = word_ngram_hash_arrays(
         df.select(F.col(id_col).alias("doc_id"), text_col),
         text_col,
@@ -144,12 +130,46 @@ def ngram_jaccard_pairs(
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+            measure,
+            F.size(F.array_intersect("sh_a", "sh_b")) / denominator("sh_a", "sh_b"),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .filter(F.col(measure) >= threshold)
+        .select("id_a", "id_b", F.round(measure, 6).alias(measure))
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+    max_shingle_df: int | None = None,
+) -> DataFrame:
+    """n-gram Jaccard similar pairs (id_a < id_b, jaccard >= t).
+
+    Candidates come from the shingle equi-join (far below a cross join);
+    the jaccard itself is then computed EXACTLY from the full shingle
+    arrays, so candidate pruning can never corrupt a reported value.
+
+    ``max_shingle_df`` caps candidate generation: shingles appearing in
+    more than that many documents are dropped from the join keys (a
+    stop-shingle shared by 10^6 docs otherwise emits 10^12 candidate
+    pairs — the 100-TB killer).  A pair is missed only if ALL its shared
+    shingles are above the cap; at jaccard >= t a pair shares >=
+    t/(1+t) * max(|A|,|B|) distinct shingles, so a cap above the hot
+    tail leaves real near-dups multiple surviving join keys.  None (the
+    default, for the oracle path) disables the cap.
+
+    Round 6: shingles are xxhash64 longs from the token-hash chain
+    (``word_ngram_hash_arrays``) — no n-gram string is built, the join
+    and the array intersect/union compare 8-byte longs (same counts up
+    to 64-bit collisions, the documented decontaminate/LSH trade), and
+    the exact arrays are rebuilt only for docs that appear in a
+    candidate pair."""
+    return _shingle_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df, "jaccard",
+        lambda a, b: F.size(F.array_union(a, b)),
     )
 
 
@@ -191,48 +211,9 @@ def ngram_containment_pairs(
 
     Round 6: hashed shingles + candidate-only array rebuild, exactly as
     in :func:`ngram_jaccard_pairs` (same collision trade)."""
-    sh = word_ngram_hash_arrays(
-        df.select(F.col(id_col).alias("doc_id"), text_col),
-        text_col,
-        ["doc_id"],
-        n,
-        out="shingles",
-    )
-    exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    if max_shingle_df is not None:
-        hot = (
-            exploded.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-        )
-        exploded = exploded.join(F.broadcast(hot), "sh", "left_anti")
-    a = exploded.select(F.col("doc_id").alias("id_a"), "sh")
-    b = exploded.select(F.col("doc_id").alias("id_b"), "sh")
-    cands = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    shc = sh.join(cand_ids, "doc_id", "left_semi")
-    sa = shc.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = shc.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.least(F.size("sh_a"), F.size("sh_b")),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
+    return _shingle_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df, "containment",
+        lambda a, b: F.least(F.size(a), F.size(b)),
     )
 
 

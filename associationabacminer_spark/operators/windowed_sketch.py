@@ -18,6 +18,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from associationabacminer_spark.operators.agg import (
+    _deserializers,
+    _fold,
+    _merge_states,
+    _projected,
+    _states,
+)
+
 WINDOW_LINEAGE_SCHEMA = (
     "window_start timestamp, window_end timestamp, sketch_name string, "
     "row_count long, sketch binary, wall_time_s double"
@@ -85,69 +93,19 @@ def windowed_sketch_partials(
     ``salt_cols`` defaults to ``[ts_col]`` — the always-present
     high-cardinality column — so one hot VALUE no longer collapses onto
     a single salt by default; pass an explicit list to override."""
-    import time as _time
-
-    from associationabacminer_spark.operators.agg import _clean, NULL_SENTINEL
-
-    exprs: dict[str, object] = {}
-    spec_cols: list[str] = []
-    for s in specs:
-        if s.prehash:
-            cn = f"__xxh_{s.column}__"
-            exprs.setdefault(
-                cn,
-                F.when(F.col(s.column).isNotNull(), F.xxhash64(s.column)).otherwise(
-                    F.lit(NULL_SENTINEL)
-                ),
-            )
-        else:
-            cn = s.column
-            exprs.setdefault(cn, F.col(cn))
-        spec_cols.append(cn)
     salt = salt_expr(specs, salts, salt_cols if salt_cols is not None else [ts_col])
-    proj = df.select(
-        F.window(ts_col, width, slide).alias("__w__"),
-        salt.alias("__salt__"),
-        *[v.alias(k) for k, v in exprs.items()],
+    proj, spec_list = _projected(
+        df, specs, F.window(ts_col, width, slide).alias("__w__"), salt.alias("__salt__")
     )
-    spec_list = [
-        (
-            s.name,
-            s.make,
-            c,
-            s.dropna,
-            s.prehash,
-            NULL_SENTINEL if s.prehash else s.null_value,
-        )
-        for s, c in zip(specs, spec_cols)
-    ]
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         ws = pdf["__w__"].iloc[0]
         salt_id = int(pdf["__salt__"].iloc[0])
-        out = []
-        for name, make, column, dropna, prehash, sentinel in spec_list:
-            t0 = _time.perf_counter()
-            kernel = make()
-            arr = _clean(pdf[column], dropna, sentinel)
-            if len(arr):
-                if prehash:
-                    kernel.update_batch(arr, prehashed=True)
-                else:
-                    kernel.update_batch(arr)
-            out.append(
-                (
-                    ws["start"],
-                    ws["end"],
-                    name,
-                    salt_id,
-                    len(arr),
-                    kernel.serialize(),
-                    _time.perf_counter() - t0,
-                )
-            )
         return pd.DataFrame(
-            out,
+            [
+                (ws["start"], ws["end"], name, salt_id, rows, blob, secs)
+                for name, rows, blob, secs in _states(_fold({}, pdf, spec_list))
+            ],
             columns=[
                 "window_start",
                 "window_end",
@@ -172,26 +130,10 @@ def _merge_window_partials(partials: DataFrame, specs) -> DataFrame:
     """Merge (window, salt) partial sketches into one row per window,
     in salt order for reproducibility.  Input per group is ``salts``
     fixed-size serialized sketches — bytes, not rows."""
-    deser = {s.name: (s.kernel_cls or type(s.make())).deserialize for s in specs}
+    deser = _deserializers(specs)
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("salt", kind="stable")
-        name = pdf["sketch_name"].iloc[0]
-        de = deser[name]
-        kernels = [de(b) for b in pdf["sketch"]]
-        merged = kernels[0]
-        for k in kernels[1:]:
-            merged = type(merged).merge(merged, k)
-        return pd.DataFrame(
-            {
-                "window_start": [pdf["window_start"].iloc[0]],
-                "window_end": [pdf["window_end"].iloc[0]],
-                "sketch_name": [name],
-                "row_count": [int(pdf["row_count"].sum())],
-                "sketch": [merged.serialize()],
-                "wall_time_s": [float(pdf["wall_time_s"].sum())],
-            }
-        )
+        return _merge_states(pdf, "salt", deser, keep=("window_start", "window_end"))
 
     return partials.groupBy("window_start", "window_end", "sketch_name").applyInPandas(
         merge, schema=WINDOW_LINEAGE_SCHEMA
@@ -204,27 +146,14 @@ def rollup_windows(
     """Merge fine-grained window sketches into coarser windows WITHOUT
     re-reading rows (mergeability is the whole point): e.g. daily
     partials -> 30-day observation windows."""
-    deser = {s.name: (s.kernel_cls or type(s.make())).deserialize for s in specs}
+    deser = _deserializers(specs)
 
     bucket = F.window(F.col("window_start"), f"{group_days} days").alias("__w__")
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start", kind="stable")
-        name = pdf["sketch_name"].iloc[0]
-        de = deser[name]
-        kernels = [de(b) for b in pdf["sketch"]]
-        merged = kernels[0]
-        for k in kernels[1:]:
-            merged = type(merged).merge(merged, k)
-        return pd.DataFrame(
-            {
-                "window_start": [pdf["__w__"].iloc[0]["start"]],
-                "window_end": [pdf["__w__"].iloc[0]["end"]],
-                "sketch_name": [name],
-                "row_count": [int(pdf["row_count"].sum())],
-                "sketch": [merged.serialize()],
-                "wall_time_s": [float(pdf["wall_time_s"].sum())],
-            }
+        w = pdf["__w__"].iloc[0]
+        return _merge_states(pdf, "window_start", deser).assign(
+            window_start=w["start"], window_end=w["end"]
         )
 
     return (
@@ -323,60 +252,24 @@ def grouped_sketch_states(
     stored, unioned across runs, and re-merged later because every
     kernel's merge is associative; estimates never require re-reading
     rows."""
-    import time as _time
-
-    from associationabacminer_spark.operators.agg import NULL_SENTINEL, _clean
-
-    exprs: dict[str, object] = {}
-    spec_cols: list[str] = []
-    for s in specs:
-        if s.prehash:
-            cn = f"__xxh_{s.column}__"
-            exprs.setdefault(
-                cn,
-                F.when(F.col(s.column).isNotNull(), F.xxhash64(s.column)).otherwise(
-                    F.lit(NULL_SENTINEL)
-                ),
-            )
-        else:
-            cn = s.column
-            exprs.setdefault(cn, F.col(cn))
-        spec_cols.append(cn)
-    salt = salt_expr(specs, salts, salt_cols)
-    proj = df.select(
+    proj, spec_list = _projected(
+        df,
+        specs,
         # declared output schema says string; cast so non-string group
         # keys (bigint ids, dates) survive the Arrow conversion
         F.col(group_col).cast("string").alias("__g__"),
-        salt.alias("__salt__"),
-        *[v.alias(k) for k, v in exprs.items()],
+        salt_expr(specs, salts, salt_cols).alias("__salt__"),
     )
-    spec_list = [
-        (
-            s.name,
-            s.make,
-            c,
-            s.dropna,
-            s.prehash,
-            NULL_SENTINEL if s.prehash else s.null_value,
-        )
-        for s, c in zip(specs, spec_cols)
-    ]
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         g = pdf["__g__"].iloc[0]
-        out = []
-        for name, make, column, dropna, prehash, sentinel in spec_list:
-            kernel = make()
-            arr = _clean(pdf[column], dropna, sentinel)
-            if len(arr):
-                if prehash:
-                    kernel.update_batch(arr, prehashed=True)
-                else:
-                    kernel.update_batch(arr)
-            out.append((g, name, int(pdf["__salt__"].iloc[0]), len(arr),
-                        kernel.serialize()))
+        salt_id = int(pdf["__salt__"].iloc[0])
         return pd.DataFrame(
-            out, columns=["group", "sketch_name", "salt", "row_count", "sketch"]
+            [
+                (g, name, salt_id, rows, blob)
+                for name, rows, blob, _ in _states(_fold({}, pdf, spec_list))
+            ],
+            columns=["group", "sketch_name", "salt", "row_count", "sketch"],
         )
 
     partials = proj.groupBy("__g__", "__salt__").applyInPandas(
@@ -385,21 +278,10 @@ def grouped_sketch_states(
         "sketch binary",
     )
 
-    deser = {s.name: (s.kernel_cls or type(s.make())).deserialize for s in specs}
-    merge_fn = {s.name: (s.kernel_cls or type(s.make())).merge for s in specs}
+    deser = _deserializers(specs)
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("salt")  # deterministic merge order
-        name = pdf["sketch_name"].iloc[0]
-        acc = None
-        for blob in pdf["sketch"]:
-            k = deser[name](bytes(blob))
-            acc = k if acc is None else merge_fn[name](acc, k)
-        return pd.DataFrame(
-            [(pdf["group"].iloc[0], name, int(pdf["row_count"].sum()),
-              acc.serialize())],
-            columns=["group", "sketch_name", "row_count", "sketch"],
-        )
+        return _merge_states(pdf, "salt", deser, keep=("group",))
 
     return partials.groupBy("group", "sketch_name").applyInPandas(
         merge,

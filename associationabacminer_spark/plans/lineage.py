@@ -47,9 +47,6 @@ def run_with_lineage(
     ledger_path: str,
     num_groups: int,
     run_id: str = "run-0",
-    group_expr=None,
-    order_by=None,
-    fanout: int = 16,
     metrics_out: dict | None = None,
 ) -> dict[str, object]:
     """Build (or resume) the sketch set, checkpointing per-group lineage.
@@ -68,8 +65,23 @@ def run_with_lineage(
     spark = df.sparkSession
     build_path = os.path.join(ledger_path, "build")
     existing = read_ledger(spark, ledger_path)
+    if existing is None:
+        only_groups, mode = None, "overwrite"
+    else:
+        present = {
+            r["group_id"]
+            for r in existing.select("group_id").distinct().collect()
+        }
+        only_groups, mode = sorted(set(range(num_groups)) - present), "append"
 
-    def _write(lineage, mode):
+    if only_groups is None or only_groups:  # a complete ledger builds nothing
+        lineage = build_sketches(
+            df,
+            specs,
+            num_groups=num_groups,
+            only_groups=only_groups,
+            method="group",  # stable content-hash group ids for the ledger
+        ).withColumn("run_id", F.lit(run_id))
         lineage, obs = observed(
             lineage,
             name=f"lineage-{run_id}-{mode}",
@@ -81,33 +93,5 @@ def run_with_lineage(
         if metrics_out is not None:
             metrics_out.update(obs.get)
 
-    if existing is None:
-        lineage = build_sketches(
-            df,
-            specs,
-            num_groups=num_groups,
-            group_expr=group_expr,
-            order_by=order_by,
-            method="group",  # stable content-hash group ids for the ledger
-        ).withColumn("run_id", F.lit(run_id))
-        _write(lineage, "overwrite")
-    else:
-        present = {
-            r["group_id"]
-            for r in existing.select("group_id").distinct().collect()
-        }
-        missing = sorted(set(range(num_groups)) - present)
-        if missing:
-            delta = build_sketches(
-                df,
-                specs,
-                num_groups=num_groups,
-                group_expr=group_expr,
-                only_groups=missing,
-                order_by=order_by,
-                method="group",
-            ).withColumn("run_id", F.lit(run_id))
-            _write(delta, "append")
-
     all_build = spark.read.parquet(build_path).drop("run_id")
-    return tree_merge(all_build, specs, fanout=fanout, n_states=num_groups)
+    return tree_merge(all_build, specs, n_states=num_groups)

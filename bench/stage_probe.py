@@ -35,7 +35,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import sys
 import time
+
+# the repository root, for bench.py's CPU control
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import cpu_control_sample as control  # noqa: E402
 
 STAGES = (
     "prep_uniq", "exact_ladder", "exact_plain", "ingest",
@@ -43,20 +49,6 @@ STAGES = (
     "decontaminate_nobloom", "spans", "lm", "mix",
     "paragraphs", "dsir", "source_overlap",
 )
-
-
-def control() -> float:
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.random((400, 400))
-    t0 = time.perf_counter()
-    n = 0
-    while time.perf_counter() - t0 < 1.5:
-        a = a @ a
-        a /= np.abs(a).max() + 1.0
-        n += 1
-    return round(n / (time.perf_counter() - t0), 1)
 
 
 def _consuming_count(df, cols):

@@ -519,7 +519,6 @@ class TestStreaming:
             stream,
             [SketchSpec("hll", HyperLogLog, "user_id", kernel_cls=HyperLogLog)],
             state,
-            num_groups=8,
         )
         q = stream.writeStream.foreachBatch(fold).start()
         try:
@@ -994,27 +993,6 @@ class TestPearsonCorrelation:
         got = np.array(pearson_correlation(df, ["x", "y", "z"]))
         want = np.corrcoef(np.stack([x, y, z]))
         assert np.allclose(got, want, atol=1e-9)
-
-
-class TestGapsAgg:
-    def test_agg_gaps_match_window_gaps(self, spark):
-        from associationabacminer_spark.operators.windows import (
-            inter_event_gaps_agg,
-            inter_event_latency,
-        )
-
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        win = sorted(
-            r["latency_s"]
-            for r in inter_event_latency(ev, "user_id", "event_id", "ts").collect()
-            if r["latency_s"] is not None
-        )
-        agg = sorted(
-            r["latency_s"]
-            for r in inter_event_gaps_agg(ev, "user_id", "event_id", "ts").collect()
-        )
-        assert len(win) == len(agg)
-        assert all(abs(a - b) < 1e-9 for a, b in zip(win, agg))
 
 
 class TestIvfTopk:

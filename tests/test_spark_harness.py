@@ -14,9 +14,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from associationabacminer_spark.operators.agg import (
+    DRIVER_THRESHOLD,
     SketchSpec,
     build_sketches,
-    salted_group_id,
     sketch_aggregate,
     tree_merge,
 )
@@ -79,7 +79,9 @@ def prepared(transcripts):
 
 class TestSketchAggregate:
     def test_hll_vs_exact_countdistinct(self, prepared):
-        sketches = sketch_aggregate(prepared, specs_all(), num_groups=64)
+        sketches = sketch_aggregate(
+            prepared, specs_all(), num_groups=64, method="group"
+        )
         est = sketches["hll_conv"].estimate()
         exact = prepared.select(F.countDistinct("conv_id")).collect()[0][0]
         bound = 3 * sketches["hll_conv"].relative_error
@@ -146,30 +148,86 @@ class TestSketchAggregate:
                 kernel_cls=CountMinSketch,
             ),
         ]
-        a = sketch_aggregate(prepared, specs, num_groups=16)
-        b = sketch_aggregate(prepared, specs, num_groups=64)
+        a = sketch_aggregate(prepared, specs, num_groups=16, method="group")
+        b = sketch_aggregate(prepared, specs, num_groups=64, method="group")
         assert a["hll_conv"].estimate() == b["hll_conv"].estimate()
         assert (a["cms_tool"].table == b["cms_tool"].table).all()
 
-    def test_salted_grouping_balances_hot_conversation(self, prepared, spark):
-        expr = salted_group_id(64, "conv_id", "turn_idx", salts=8)
-        dist = (
-            prepared.withColumn("g", expr)
-            .groupBy("g")
-            .count()
-            .select(F.max("count").alias("mx"), F.sum("count").alias("total"))
-            .collect()[0]
+    def test_num_groups_refused_on_map_path(self, prepared):
+        """The map build has one group per input partition; a group
+        count passed to it would be silently ignored, so it is refused."""
+        with pytest.raises(ValueError, match="num_groups"):
+            build_sketches(prepared, specs_all(), num_groups=16)
+        with pytest.raises(ValueError, match="num_groups"):
+            sketch_aggregate(prepared, specs_all(), num_groups=16, method="map")
+
+    def test_paths_and_tree_loop_agree(self, spark):
+        """Every build shape folds the same rows into register-identical
+        HLL/CMS/Bloom states: the group build over more groups than the
+        driver folds (so the multi-level tree merge runs), the group build
+        under it, the map build, one window covering every row, and the
+        keyed build under a constant key."""
+        from associationabacminer_spark.operators.windowed_sketch import (
+            grouped_sketch_states,
+            windowed_sketches,
         )
-        # the hottest conversation has ~20k of ~80k rows; unsalted it
-        # would melt one group. With 64 salted groups the max group must
-        # hold well under that.
-        hot = (
-            prepared.groupBy("conv_id").count().select(F.max("count")).collect()[0][0]
+
+        rows = [
+            (f"k{i % 1700}", None if i % 7 == 0 else f"t{i % 13}", 1_700_000_000 + i)
+            for i in range(6000)
+        ]
+        df = spark.createDataFrame(rows, "key string, tool string, ts_s long").select(
+            "key", "tool", F.col("ts_s").cast("timestamp").alias("ts")
         )
-        assert dist["mx"] < hot
+        specs = [
+            SketchSpec("hll", HyperLogLog, "key", kernel_cls=HyperLogLog, prehash=True),
+            SketchSpec(
+                "cms",
+                lambda: CountMinSketch(width=512, depth=4),
+                "tool",
+                kernel_cls=CountMinSketch,
+                prehash=True,
+            ),
+            SketchSpec(
+                "bloom",
+                lambda: BloomFilter.from_capacity(5_000, 0.01),
+                "key",
+                kernel_cls=BloomFilter,
+                prehash=True,
+            ),
+        ]
+        wide = build_sketches(df, specs, num_groups=130, method="group")
+        assert wide.select("group_id").distinct().count() > DRIVER_THRESHOLD
+
+        def deserialized(states):
+            return {
+                r["sketch_name"]: next(
+                    s.kernel_cls for s in specs if s.name == r["sketch_name"]
+                ).deserialize(bytes(r["sketch"]))
+                for r in states.collect()
+            }
+
+        windows = windowed_sketches(df, specs, "ts", "1 day", "1 day")
+        assert windows.count() == len(specs)  # one window holds every row
+        paths = {
+            "group_130": sketch_aggregate(df, specs, num_groups=130, method="group"),
+            "group_16": sketch_aggregate(df, specs, num_groups=16, method="group"),
+            "map": sketch_aggregate(df, specs),
+            "window": deserialized(windows),
+            "keyed": deserialized(
+                grouped_sketch_states(df.withColumn("k", F.lit("all")), "k", specs)
+            ),
+        }
+        want = paths.pop("group_130")
+        assert want["cms"].total == sum(r[1] is not None for r in rows)
+        for name, got in paths.items():
+            assert got["hll"].estimate() == want["hll"].estimate(), name
+            assert (got["hll"]._registers() == want["hll"]._registers()).all(), name
+            assert (got["cms"].table == want["cms"].table).all(), name
+            assert (got["bloom"].words == want["bloom"].words).all(), name
 
     def test_lineage_schema_and_wall_time(self, prepared):
-        lineage = build_sketches(prepared, specs_all(), num_groups=16)
+        lineage = build_sketches(prepared, specs_all(), num_groups=16, method="group")
         rows = lineage.collect()
         assert {r["sketch_name"] for r in rows} == {
             "hll_conv",
